@@ -45,7 +45,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._lake import ensure_lake, formula_tag, keyed_dir
+from ._lake import ensure_lake, formula_tag, keyed_dir, replace_partitions
 
 VERSION = 3  # v3: lines files carry bucket ids (bucketBy writer)
 _LINE_BUCKETS = 32
@@ -219,8 +219,8 @@ def battlelog_tables(
 # lake's COMPACTED side (the reference's per-day files,
 # tasks/compaction.py:219-225), refreshed INCREMENTALLY: only (format,
 # date) partitions whose document count changed since the last refresh
-# are re-parsed and dynamically overwritten — the analytics analogue of
-# compact()'s anti-join + dynamic-partition-overwrite contract. At 100
+# are re-parsed and swapped in — the analytics analogue of compact()'s
+# anti-join + ``replace_partitions`` contract. At 100
 # TB this is the difference between a daily refresh costing one day's
 # parse and costing the whole corpus's.
 
@@ -244,14 +244,14 @@ def refresh_battlelog_layer(spark: SparkSession, lake) -> dict:
     lake only ever GAINS documents per day (compact() skips
     already-compacted ids), so a count change is exactly "this day has
     new replays". Changed days re-parse whole — same day-granularity
-    rewrite as compaction itself — and land via dynamic partition
-    overwrite, so concurrent readers never see a half-written day.
+    rewrite as compaction itself — and land via ``replace_partitions``
+    (staged, then renamed in per day), so a crash mid-write leaves
+    every day either fully old or fully new.
     """
     from pyspark.sql.utils import AnalysisException
 
     from ..functions.logparse import battle_events
     from ..functions.scalars import log_timestamp
-    from .lake import _dynamic_overwrite
 
     paths = analysis_paths(lake)
     try:
@@ -289,8 +289,6 @@ def refresh_battlelog_layer(spark: SparkSession, lake) -> dict:
     lines = battle_events(docs_todo, keep=("format", "date")).select(
         "replay_id", "line_no", "command", "args", "event_ts", "format", "date"
     )
-    _dynamic_overwrite(lines, paths["lines"], ["format", "date"])
-
     docs_rows = docs_todo.select(
         F.col("id").alias("replay_id"),
         "uploadtime",
@@ -301,7 +299,11 @@ def refresh_battlelog_layer(spark: SparkSession, lake) -> dict:
         "format",
         "date",
     )
-    _dynamic_overwrite(docs_rows, paths["docs"], ["format", "date"])
+    for table, rows in (("lines", lines), ("docs", docs_rows)):
+        # one right-sized file per rewritten day partition (guide §6)
+        replace_partitions(
+            rows.hint("rebalance", "format", "date"), paths[table], ["format", "date"]
+        )
 
     # manifest rewrite: the full per-partition count table (tiny — one
     # row per (format, day)); written last so a crashed refresh just

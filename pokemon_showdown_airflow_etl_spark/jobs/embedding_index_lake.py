@@ -48,7 +48,14 @@ from pyspark.sql import functions as F
 
 from pathlib import Path
 
-from ._lake import ensure_lake, formula_tag, keyed_dir
+from ._lake import (
+    ensure_lake,
+    formula_tag,
+    keyed_dir,
+    replace_dir,
+    replace_partitions,
+    restore_dir,
+)
 from .doc_signature_lake import (
     _committed_batches,
     compact_signature_corpus,
@@ -866,7 +873,7 @@ def reindex_embedding_index(
 
     * assignments — RE-ASSIGNED: ONE broadcast-centroid map pass over
       all pending batches together (``assign_cells`` rank-1 under the
-      new quantizer), landed as one dynamic-partition-overwrite write —
+      new quantizer), landed as one ``replace_partitions`` write —
       O(1) Spark jobs however many batches the ledger holds, not one
       driver-serialized job per batch (the r7 scale flag). Admission
       decisions are NEVER re-scored — the surviving vector set is the
@@ -1021,7 +1028,7 @@ def reindex_embedding_index(
     # its rank window by the id column, and a struct key ranks
     # identically since vec_ids are corpus-unique), so the existing
     # oracle-pinned assignment formula is reused untouched; the write
-    # is one dynamic-partition-overwrite, which replaces exactly the
+    # is one ``replace_partitions`` swap, which replaces exactly the
     # pending batch= dirs and leaves already-migrated ones alone.
     # Crash semantics are unchanged: markers land per batch AFTER the
     # job, so a crash anywhere re-runs only marker-less batches, and
@@ -1046,9 +1053,7 @@ def reindex_embedding_index(
             "cell_id",
             F.col("vec_id.batch").alias("batch"),
         )
-        reassigned.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch").parquet(os.path.join(new_root, "assignments"))
+        replace_partitions(reassigned, os.path.join(new_root, "assignments"), ["batch"])
         from .doc_signature_lake import ESTATS_TABLE
 
         for b in pending:
@@ -1153,18 +1158,13 @@ def build_pq_layer(
     corpus rebuilds byte-identically). Idempotent: an existing
     committed layer is left untouched unless ``refresh``.
 
-    A refresh builds the ENTIRE new layer in a sibling staging dir
-    (codebook.json first, then codes + marker) and swaps it in with two
-    atomic renames — the committed snapshot keeps serving pq_layer_search
-    until the replacement is complete, and a crash mid-build leaves it
-    untouched; a crash BETWEEN the two renames (no serving dir, snapshot
-    parked in old/) is healed on the next build by restoring old/ before
-    residue cleanup (both crash-injection tested in tests/test_pq.py).
-    SINGLE-WRITER per index_root: the fixed .staging/.old sibling names
-    are swept as crash residue, so concurrent builds on the same root
-    would delete each other's in-flight state — serialize via the
-    orchestrator (jobs/tokenize.py::tokenize_corpus shares this
-    convention and its caveat).
+    A refresh builds the ENTIRE new layer (codebook.json first, then
+    codes + marker) through ``_lake.replace_dir``: the committed
+    snapshot keeps serving pq_layer_search until the replacement is
+    complete, a crash mid-build leaves it untouched, and a crash between
+    the two swap renames is healed on the next build (both
+    crash-injection tested in tests/test_pq.py). SINGLE-WRITER per
+    index_root, like every lake rewrite — serialize via the orchestrator.
 
     ``residual=True`` stores RESIDUAL codes (s24, the FAISS-default
     refinement): every committed vector is encoded as r = v -
@@ -1191,25 +1191,16 @@ def build_pq_layer(
     Returns counts only: n_vectors, n_sub, n_codes, refreshed, opq.
     """
     import json as _json
-    import shutil
 
     from ..operators.similarity import pq_codebook, pq_encode
 
     d = _pq_dir(index_root)
     codes_dir = os.path.join(d, "codes")
-    marker = os.path.join(codes_dir, "_SUCCESS")
-    staging, old = d + ".staging", d + ".old"
-    # recover a crash BETWEEN the two swap renames: d was renamed to
-    # old/ but staging/ never renamed in, so no layer is serving while
-    # old/ still holds the last committed snapshot — restore it before
-    # anything below treats old/ as deletable residue (losing the only
-    # committed copy) or returns "no layer"
-    old_marker = os.path.join(old, "codes", "_SUCCESS")
-    if not os.path.exists(marker) and os.path.exists(old_marker):
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-        os.rename(old, d)
-    if os.path.exists(marker) and not refresh:
+    marker_rel = os.path.join("codes", "_SUCCESS")
+    # a snapshot stranded by a crash between the swap renames is the
+    # committed layer: restore it before deciding whether one exists
+    restore_dir(d, marker_rel)
+    if os.path.exists(os.path.join(d, marker_rel)) and not refresh:
         with open(os.path.join(d, "codebook.json")) as f:
             meta = _json.load(f)
         if residual and not meta.get("residual"):
@@ -1243,18 +1234,6 @@ def build_pq_layer(
             f"{index_root!r} has no committed assignments — ingest the "
             "corpus before building its PQ layer"
         )
-    # stale residue from a crashed earlier build/swap (a committed
-    # old/ was already restored to d above, so rmtree only ever sees
-    # true residue here)
-    for residue in (staging, old):
-        if os.path.isdir(residue):
-            shutil.rmtree(residue)
-    # an UNcommitted main dir (no marker) is residue too; a committed
-    # one keeps serving reads until the staged replacement swaps in
-    committed = os.path.exists(marker)
-    if os.path.isdir(d) and not committed:
-        shutil.rmtree(d)
-    os.makedirs(staging)
     # residual leg (s24): the encode source becomes r = v - centroid
     # of the STORED rank-1 assignment — one broadcast-centroid zip_with
     # map over the committed rows, no shuffle; codebook rule unchanged,
@@ -1295,26 +1274,23 @@ def build_pq_layer(
         )
     else:
         cb = pq_codebook(src, n_sub=n_sub, n_codes=n_codes, vec_col=src_col, perm=perm)
-    # codebook JSON BEFORE the codes write: codes/_SUCCESS is the
-    # layer's commit marker, so everything the marker promises (the
-    # codebook the codes were encoded with) must exist first — a crash
-    # anywhere before the marker leaves an incomplete STAGING dir; the
-    # committed layer (if any) never stops serving
-    with open(os.path.join(staging, "codebook.json"), "w") as f:
-        _json.dump(
-            {
-                "n_sub": n_sub, "n_codes": n_codes, "codebook": cb,
-                "perm": perm, "residual": residual,
-            },
-            f,
-        )
-    encoded = pq_encode(src, cb, vec_col=src_col, perm=perm)
-    encoded.write.parquet(os.path.join(staging, "codes"))
-    if os.path.isdir(d):
-        os.rename(d, old)
-    os.rename(staging, d)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
+
+    def build(staging: str) -> None:
+        # codebook JSON BEFORE the codes write: codes/_SUCCESS is the
+        # layer's commit marker, so everything the marker promises (the
+        # codebook the codes were encoded with) must exist first
+        with open(os.path.join(staging, "codebook.json"), "w") as f:
+            _json.dump(
+                {
+                    "n_sub": n_sub, "n_codes": n_codes, "codebook": cb,
+                    "perm": perm, "residual": residual,
+                },
+                f,
+            )
+        encoded = pq_encode(src, cb, vec_col=src_col, perm=perm)
+        encoded.write.parquet(os.path.join(staging, "codes"))
+
+    replace_dir(d, build, marker_rel)
     n = spark.read.parquet(codes_dir).count()
     return {
         "n_vectors": n, "n_sub": n_sub, "n_codes": n_codes,

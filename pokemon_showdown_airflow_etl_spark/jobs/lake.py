@@ -16,13 +16,17 @@ pruning replaces both the directory walks and the SQLite secondary
 indexes (db.py:73-76). At 100 TB each (format, date) partition is a
 handful of parquet files, and every job below touches only the
 partitions it names — no full-table rewrite anywhere.
+
+Appends add files and rewrite none. Every rewrite of existing
+partitions (MERGE-shaped patches and upserts here, compaction, the
+maintenance jobs) commits through ``_lake.replace_partitions``:
+stage the new leaves beside the table, then rename them in.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..operators.merge import merge_patch, upsert
 from ..schemas import FORMAT_STATE, REPLAY_STATUS
+from ._lake import replace_partitions
 
 
 @dataclass(frozen=True)
@@ -51,83 +56,6 @@ class ReplayLake:
     @property
     def state_dir(self) -> str:
         return os.path.join(self.root, "state")
-
-
-def _dynamic_overwrite(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Overwrite only the partitions present in ``df`` (the moral
-    equivalent of the reference's per-day file rewrite at
-    compaction.py:219-225, and of Delta MERGE file pruning)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        # localCheckpoint materializes rows read from `path` before the
-        # overwrite clobbers their source files. REBALANCE on the
-        # partition columns right-sizes output files (one task's rows
-        # per leaf instead of every-task-touches-every-leaf, AQE
-        # splitting any hot partition) — small-file hygiene, guide §6.
-        df.localCheckpoint(eager=True).hint(
-            "rebalance", *partition_cols
-        ).write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def _leaf_partition_dirs(root: str, depth: int) -> list[str]:
-    """Relative paths of the ``col=value`` leaf partition directories
-    exactly ``depth`` levels below ``root``."""
-    out: list[str] = []
-
-    def walk(cur: str, rel: str, level: int) -> None:
-        for entry in os.scandir(cur):
-            if not entry.is_dir() or "=" not in entry.name:
-                continue
-            sub = os.path.join(rel, entry.name) if rel else entry.name
-            if level + 1 == depth:
-                out.append(sub)
-            else:
-                walk(entry.path, sub, level + 1)
-
-    walk(root, "", 0)
-    return out
-
-
-def _atomic_partition_swap(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Durable per-partition replace: write ``df`` to a sibling staging
-    table first, then swap each staged leaf partition directory into the
-    live table with renames (stage-then-swap, like the reference's
-    backup-table copy in reset_format_state.py).
-
-    Unlike an in-place dynamic overwrite, the live files are never the
-    write target while they are also the read source, so a crash
-    mid-write leaves every live partition either fully old or fully new:
-    before the first rename nothing changed; between renames a partition
-    briefly lives at ``.swap-<name>`` (restored or superseded by the
-    next run; cleaned by maintenance.cleanup_lake). No localCheckpoint
-    pinning is needed — the lineage can lazily re-read the untouched
-    live files while staging materializes.
-    """
-    staging = path + "__staging"
-    shutil.rmtree(staging, ignore_errors=True)
-    # REBALANCE on the partition columns: without it every upstream
-    # shuffle task writes a sliver into every touched leaf (tasks x
-    # leaves files); with it each leaf gets one right-sized file and
-    # AQE still splits a skewed month into several (guide §6).
-    df.hint("rebalance", *partition_cols).write.partitionBy(*partition_cols).mode(
-        "overwrite"
-    ).parquet(staging)
-    for rel in _leaf_partition_dirs(staging, len(partition_cols)):
-        live = os.path.join(path, rel)
-        parent = os.path.dirname(live)
-        os.makedirs(parent, exist_ok=True)
-        # dot-prefixed => invisible to Spark's file listing if left behind
-        bak = os.path.join(parent, ".swap-" + os.path.basename(live))
-        shutil.rmtree(bak, ignore_errors=True)
-        if os.path.exists(live):
-            os.rename(live, bak)
-        os.rename(os.path.join(staging, rel), live)
-        shutil.rmtree(bak, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
 
 
 # uploadtime -> 'yyyy-MM' month key via pure epoch-day arithmetic
@@ -153,9 +81,8 @@ class MetadataStore:
     reference scale x1000). Writes are MERGE-shaped — insert_new is
     the one-transaction existence-check+insert of db.py:832-928,
     patch is the in-place stage-flag UPDATE of db.py:736-830 — and
-    every rewrite lands via stage-then-rename-swap
-    (_atomic_partition_swap), not an in-place overwrite of the files
-    being read.
+    every rewrite lands via ``replace_partitions`` (stage, then rename
+    each leaf in), never an in-place overwrite of the files being read.
     """
 
     PARTITION_COLS = ["format_id", "um"]
@@ -188,6 +115,17 @@ class MetadataStore:
     @staticmethod
     def _with_month(rows: DataFrame) -> DataFrame:
         return rows.withColumn("um", _month_col())
+
+    def replace(self, rows: DataFrame) -> None:
+        """Swap in the (format_id, um) leaves present in ``rows``
+        (which carry ``um``). REBALANCE on the partition columns:
+        without it every upstream shuffle task writes a sliver into
+        every touched leaf (tasks x leaves files); with it each leaf
+        gets one right-sized file and AQE still splits a skewed month
+        into several (guide §6)."""
+        replace_partitions(
+            rows.hint("rebalance", *self.PARTITION_COLS), self.path, self.PARTITION_COLS
+        )
 
     def insert_new(self, rows: DataFrame) -> int:
         """J2 idempotent ingest (db.py:853-912): left-anti vs existing
@@ -244,8 +182,7 @@ class MetadataStore:
             return
         current = fmt.filter(F.col("um").isin(months)).drop("um")
         merged = merge_patch(current, patch.drop("format_id"), ["replay_id"])
-        merged = self._with_month(merged.withColumn("format_id", F.lit(format_id)))
-        _atomic_partition_swap(merged, self.path, self.PARTITION_COLS)
+        self.replace(self._with_month(merged.withColumn("format_id", F.lit(format_id))))
 
     def upsert_rows(self, rows: DataFrame) -> None:
         """Full-row INSERT OR REPLACE (db.py:230-236), scoped to the
@@ -254,11 +191,7 @@ class MetadataStore:
         months; both sides must rewrite or the old copy survives)."""
         rows = rows.select(*[f.name for f in REPLAY_STATUS.fields])
         if not self.exists():
-            self._with_month(rows).hint(
-                "rebalance", *self.PARTITION_COLS
-            ).write.partitionBy(*self.PARTITION_COLS).mode("overwrite").parquet(
-                self.path
-            )
+            self.replace(self._with_month(rows))
             return
         touched_fmt = [r[0] for r in rows.select("format_id").distinct().collect()]
         raw = self._read_raw().filter(F.col("format_id").isin(touched_fmt))
@@ -278,8 +211,7 @@ class MetadataStore:
         }
         months = sorted(incoming_months | matched_months)
         current = raw.filter(F.col("um").isin(months)).drop("um")
-        merged = upsert(current, rows, ["replay_id", "format_id"])
-        _atomic_partition_swap(self._with_month(merged), self.path, self.PARTITION_COLS)
+        self.replace(self._with_month(upsert(current, rows, ["replay_id", "format_id"])))
 
 
 def register_lake_views(spark: SparkSession, lake: ReplayLake) -> list[str]:

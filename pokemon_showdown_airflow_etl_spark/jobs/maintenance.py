@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators import metadata as M
 from ..schemas import REPLAY_STATUS
+from ._lake import replace_partitions, sweep_litter
 from .lake import MetadataStore, ReplayLake
 from .pipeline import _batch_id
 
@@ -117,14 +118,10 @@ def deduplicate_metadata(spark: SparkSession, lake: ReplayLake) -> dict:
     if n_dupes == 0:
         return {"duplicate_keys": 0, "rows_removed": 0}
     before = current.count()
-    deduped = M.dedup_keep_latest(current)
-    # rebuild through the store's atomic swap so the physical layout
+    # rebuild through the store's partition swap so the physical layout
     # (format_id, um) and durability guarantees stay uniform
-    from .lake import _atomic_partition_swap
-
-    staged = MetadataStore._with_month(deduped).localCheckpoint(eager=True)
-    _atomic_partition_swap(staged, meta.path, MetadataStore.PARTITION_COLS)
-    return {"duplicate_keys": n_dupes, "rows_removed": before - staged.count()}
+    meta.replace(MetadataStore._with_month(M.dedup_keep_latest(current)))
+    return {"duplicate_keys": n_dupes, "rows_removed": before - meta.read().count()}
 
 
 def optimize_lake(spark: SparkSession, lake: ReplayLake, target_files_per_partition: int = 1) -> dict:
@@ -151,13 +148,12 @@ def optimize_lake(spark: SparkSession, lake: ReplayLake, target_files_per_partit
             "_fsalt", (F.rand(seed=7) * target_files_per_partition).cast("int")
         )
         keys.append("_fsalt")
-    (
-        docs.repartition(shuffle_n, *keys)
-        .drop("_fsalt")
-        .localCheckpoint(eager=True)
-        .write.partitionBy("format", "date")
-        .mode("overwrite")
-        .parquet(lake.replays_path)
+    # staged swap, not an overwrite of the files being read: a crash
+    # leaves every day partition either fully old or fully new
+    replace_partitions(
+        docs.repartition(shuffle_n, *keys).drop("_fsalt"),
+        lake.replays_path,
+        ["format", "date"],
     )
     return {"rewritten": n, "partitions": n_parts}
 
@@ -235,41 +231,6 @@ def cleanup_lake(lake: ReplayLake, max_age_s: float = 0.0) -> dict:
     is still writing: only litter older than this is touched (0 sweeps
     everything — fine for single-writer maintenance windows).
     """
-    import os
-    import shutil
-    import time
-
-    removed: list[str] = []
-    restored: list[str] = []
-    now = time.time()
-
-    def old_enough(path: str) -> bool:
-        try:
-            return now - os.path.getmtime(path) >= max_age_s
-        except OSError:
-            return False
-
-    if not os.path.exists(lake.root):
-        return {"removed": 0, "restored": 0, "paths": []}
-
-    for dirpath, dirs, _files in os.walk(lake.root, topdown=True):
-        for d in list(dirs):
-            full = os.path.join(dirpath, d)
-            if d == "_temporary" or d.endswith("__staging"):
-                if old_enough(full):
-                    shutil.rmtree(full, ignore_errors=True)
-                    removed.append(os.path.relpath(full, lake.root))
-                    dirs.remove(d)
-            elif d.startswith(".swap-"):
-                if not old_enough(full):
-                    continue
-                live = os.path.join(dirpath, d[len(".swap-"):])
-                if os.path.exists(live):
-                    shutil.rmtree(full, ignore_errors=True)
-                    removed.append(os.path.relpath(full, lake.root))
-                else:
-                    os.rename(full, live)  # crash between the two renames
-                    restored.append(os.path.relpath(live, lake.root))
-                dirs.remove(d)
+    removed, restored = sweep_litter(lake.root, max_age_s)
     return {"removed": len(removed), "restored": len(restored),
             "paths": sorted(removed + restored)}

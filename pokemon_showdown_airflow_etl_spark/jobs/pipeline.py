@@ -26,15 +26,16 @@ from __future__ import annotations
 
 import datetime
 import json
-from typing import Iterator
+from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import scalars as C
 from ..operators import metadata as M
 from ..schemas import PAGE_SIZE, REPLAY_DOCUMENT, REPLAY_STATUS
 from ..sources.api import ReplayApiClient
+from ._lake import replace_partitions
 from .lake import MetadataStore, ReplayLake, save_state
 
 FETCH_RESULT = (
@@ -219,6 +220,41 @@ def _docs_from_fetch(fetched: DataFrame) -> DataFrame:
     )
 
 
+def _fetch_and_land(
+    spark: SparkSession,
+    lake: ReplayLake,
+    client: ReplayApiClient,
+    format_id: str,
+    parallelism: int,
+    work_of: Callable[[DataFrame, str], DataFrame],
+    patch_cols: list[Column],
+) -> tuple[int, int] | None:
+    """The shared body of download and retry: fetch the metadata rows
+    ``work_of`` selects on the executors, append the fetched documents
+    to the raw lake, MERGE ``patch_cols`` (status columns over the fetch
+    result) into metadata. Returns (attempted, ok), or None when there
+    is no work."""
+    meta = MetadataStore(spark, lake.metadata_path)
+    work = work_of(meta.read(), format_id)
+    if work.isEmpty():
+        return None
+    fetched = _distributed_fetch(work, client, parallelism)
+    # REBALANCE on the partition columns before the partitioned append:
+    # without it every fetch task writes a sliver into every (format,
+    # date) leaf it saw — tasks x days tiny files that every later scan
+    # (compaction's semi-join, the b-lake build) pays to list and open.
+    # With it each leaf gets one right-sized file per batch and AQE
+    # still splits a skewed day across tasks (guide §6).
+    _docs_from_fetch(fetched).hint("rebalance", "format", "date").write.partitionBy(
+        "format", "date"
+    ).mode("append").parquet(lake.replays_path)
+    meta.patch(fetched.select("replay_id", *patch_cols), format_id)
+    counts = fetched.agg(
+        F.count("*").alias("total"), F.sum(F.col("ok").cast("int")).alias("ok")
+    ).first()
+    return counts["total"], counts["ok"] or 0
+
+
 def download(
     spark: SparkSession,
     lake: ReplayLake,
@@ -229,47 +265,25 @@ def download(
     """Download stage (tasks/download.py:105-266): fetch every
     undownloaded replay, land documents in the partitioned replay lake,
     MERGE per-replay success/failure into metadata."""
-    meta = MetadataStore(spark, lake.metadata_path)
-    work = M.undownloaded(meta.read(), format_id)  # F2, partition-pruned
-    if work.isEmpty():
-        return {"total": 0, "downloaded": 0, "failed": 0, "skipped": True}
     batch = _batch_id(format_id)
-
-    fetched = _distributed_fetch(work, client, parallelism)
-    docs = _docs_from_fetch(fetched)
-    # REBALANCE on the partition columns before the partitioned append:
-    # without it every fetch task writes a sliver into every (format,
-    # date) leaf it saw — tasks x days tiny files that every later scan
-    # (compaction's semi-join, the b-lake build) pays to list and open.
-    # With it each leaf gets one right-sized file per batch and AQE
-    # still splits a skewed day across tasks (guide §6).
-    docs.hint("rebalance", "format", "date").write.partitionBy(
-        "format", "date"
-    ).mode("append").parquet(lake.replays_path)
-
     # db.py:736-830: success -> is_downloaded + details "(batch X)";
     # failure -> details "Failed: ..." (C8 prefix convention, db.py:366).
-    patch = fetched.select(
-        "replay_id",
-        F.col("ok").alias("is_downloaded"),
-        F.current_timestamp().alias("downloaded_at"),
-        F.lit(batch).alias("downloaded_batch"),
-        F.when(F.col("ok"), F.lit(f"Downloaded (batch {batch})"))
-        .otherwise(F.concat(F.lit(C.FAILED_PREFIX), F.col("error")))
-        .alias("download_details"),
+    counts = _fetch_and_land(
+        spark, lake, client, format_id, parallelism,
+        M.undownloaded,  # F2, partition-pruned
+        [
+            F.col("ok").alias("is_downloaded"),
+            F.current_timestamp().alias("downloaded_at"),
+            F.lit(batch).alias("downloaded_batch"),
+            F.when(F.col("ok"), F.lit(f"Downloaded (batch {batch})"))
+            .otherwise(F.concat(F.lit(C.FAILED_PREFIX), F.col("error")))
+            .alias("download_details"),
+        ],
     )
-    meta.patch(patch, format_id)
-
-    counts = fetched.agg(
-        F.count("*").alias("total"), F.sum(F.col("ok").cast("int")).alias("ok")
-    ).first()
-    n_ok = counts["ok"] or 0
-    return {
-        "batch_id": batch,
-        "total": counts["total"],
-        "downloaded": n_ok,
-        "failed": counts["total"] - n_ok,
-    }
+    if counts is None:
+        return {"total": 0, "downloaded": 0, "failed": 0, "skipped": True}
+    total, ok = counts
+    return {"batch_id": batch, "total": total, "downloaded": ok, "failed": total - ok}
 
 
 # --- stage 3: retry (T4 dead-letter re-drive) -------------------------------
@@ -285,45 +299,28 @@ def retry_failed(
     """Retry stage (tasks/retry.py:23-158): re-fetch failed-and-never-
     retried downloads (F4 three-valued-logic predicate, db.py:562-569);
     every attempted row gets is_retry_attempted=True exactly once."""
-    meta = MetadataStore(spark, lake.metadata_path)
-    work = M.failed_unretried(meta.read(), format_id)
-    if work.isEmpty():
-        return {"total": 0, "recovered": 0, "failed": 0, "skipped": True}
     batch = _batch_id(format_id, prefix="retry_")
-
-    fetched = _distributed_fetch(work, client, parallelism)
-    docs = _docs_from_fetch(fetched)
-    # same small-file hygiene as download's landing write (guide §6)
-    docs.hint("rebalance", "format", "date").write.partitionBy(
-        "format", "date"
-    ).mode("append").parquet(lake.replays_path)
-
-    patch = fetched.select(
-        "replay_id",
-        F.lit(True).alias("is_retry_attempted"),
-        F.current_timestamp().alias("retry_at"),
-        F.lit(batch).alias("retry_batch"),
-        F.when(F.col("ok"), F.lit(f"Recovered (batch {batch})"))
-        .otherwise(F.concat(F.lit(C.FAILED_PREFIX), F.col("error")))
-        .alias("retry_details"),
-        # recovered rows also flip the download flag (retry.py:106-130)
-        F.when(F.col("ok"), F.lit(True)).alias("is_downloaded"),
-        F.when(F.col("ok"), F.lit(f"Downloaded on retry (batch {batch})")).alias(
-            "download_details"
-        ),
+    counts = _fetch_and_land(
+        spark, lake, client, format_id, parallelism,
+        M.failed_unretried,
+        [
+            F.lit(True).alias("is_retry_attempted"),
+            F.current_timestamp().alias("retry_at"),
+            F.lit(batch).alias("retry_batch"),
+            F.when(F.col("ok"), F.lit(f"Recovered (batch {batch})"))
+            .otherwise(F.concat(F.lit(C.FAILED_PREFIX), F.col("error")))
+            .alias("retry_details"),
+            # recovered rows also flip the download flag (retry.py:106-130)
+            F.when(F.col("ok"), F.lit(True)).alias("is_downloaded"),
+            F.when(F.col("ok"), F.lit(f"Downloaded on retry (batch {batch})")).alias(
+                "download_details"
+            ),
+        ],
     )
-    meta.patch(patch, format_id)
-
-    counts = fetched.agg(
-        F.count("*").alias("total"), F.sum(F.col("ok").cast("int")).alias("ok")
-    ).first()
-    n_ok = counts["ok"] or 0
-    return {
-        "batch_id": batch,
-        "total": counts["total"],
-        "recovered": n_ok,
-        "failed": counts["total"] - n_ok,
-    }
+    if counts is None:
+        return {"total": 0, "recovered": 0, "failed": 0, "skipped": True}
+    total, ok = counts
+    return {"batch_id": batch, "total": total, "recovered": ok, "failed": total - ok}
 
 
 # --- stage 4: compaction (K2 day-partition rewrite) -------------------------
@@ -347,8 +344,8 @@ def compact_fresh(todo: DataFrame, existing: DataFrame) -> DataFrame:
 
 def compact_keep(existing: DataFrame, days: DataFrame) -> DataFrame:
     """Existing rows of the touched days, re-written alongside the fresh
-    rows so dynamic overwrite replaces complete partitions. ``days`` is
-    a distinct (format, date) list — tiny, broadcast explicitly."""
+    rows so the partition swap replaces complete days. ``days`` is a
+    distinct (format, date) list — tiny, broadcast explicitly."""
     return existing.join(F.broadcast(days), ["format", "date"], "left_semi")
 
 
@@ -358,12 +355,12 @@ def compact(spark: SparkSession, lake: ReplayLake, format_id: str) -> dict:
     already present (J3 anti-join replaces the in-file id-set probe at
     compaction.py:158-180), then rewrite ONLY the touched (format, date)
     partitions — the reference's whole-file rewrite (:219-225) becomes
-    dynamic partition overwrite."""
+    a staged ``replace_partitions`` swap of those days."""
     import os
 
     meta = MetadataStore(spark, lake.metadata_path)
-    # work/todo are pinned with localCheckpoint: the status MERGE below
-    # overwrites the metadata files they scan.
+    # work/todo are pinned with localCheckpoint: the counts, the joins
+    # and the status MERGE below share one computation of each.
     work = (
         M.downloaded_uncompacted(meta.read(), format_id)  # F3
         .select("replay_id")
@@ -383,41 +380,30 @@ def compact(spark: SparkSession, lake: ReplayLake, format_id: str) -> dict:
     todo = compact_todo(replays, work).localCheckpoint(eager=True)
     n_todo = todo.count()
 
-    has_compacted = os.path.exists(lake.compacted_path)
-    if has_compacted:
+    if os.path.exists(lake.compacted_path):
         existing = spark.read.parquet(lake.compacted_path).filter(
             F.col("format") == format_id
         )
-        # the anti-join reads the compacted files the overwrite below
-        # replaces, so it must pin; todo's pin does NOT cover it
+        # fresh is read again for n_days AFTER the swap below replaces
+        # the compacted files it anti-joins against, so it must pin
         fresh = compact_fresh(todo, existing).localCheckpoint(eager=True)  # J3
         n_fresh = fresh.count()
+        # union existing rows of the touched days so the swap replaces
+        # complete partitions (U1, compaction.py:219)
+        out = compact_keep(existing, fresh.select("format", "date").distinct())
+        out = out.unionByName(fresh)
     else:
-        existing = None
         # first compaction: fresh IS todo, already pinned and counted —
         # re-checkpointing it would materialize the same rows again
-        fresh = todo
+        fresh = out = todo
         n_fresh = n_todo
     if n_fresh:
-        if existing is not None:
-            # union existing rows of the touched days so the dynamic
-            # overwrite rewrites complete partitions (U1, compaction.py:219);
-            # keep reads the live compacted files -> pin the union before
-            # the overwrite clobbers them
-            days = fresh.select("format", "date").distinct()
-            keep = compact_keep(existing, days)
-            out = keep.unionByName(fresh).localCheckpoint(eager=True)
-        else:
-            out = fresh  # already pinned; nothing below reads the target
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            # one right-sized file per rewritten day partition (guide §6)
-            out.hint("rebalance", "format", "date").write.partitionBy(
-                "format", "date"
-            ).mode("overwrite").parquet(lake.compacted_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # one right-sized file per rewritten day partition (guide §6)
+        replace_partitions(
+            out.hint("rebalance", "format", "date"),
+            lake.compacted_path,
+            ["format", "date"],
+        )
 
     # status flush: everything in the work list that now exists in the
     # compacted lake is marked compacted (one MERGE replaces the 500-id

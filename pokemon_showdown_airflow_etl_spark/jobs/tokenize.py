@@ -22,15 +22,13 @@ Output layout under ``output_dir``:
                commit marker
 
 The two files are one artifact — ids in ``encoded/`` are meaningless
-under any other vocab — so a rebuild stages BOTH in a sibling
-``.staging`` dir and swaps the whole directory in with two renames
-(the build_pq_layer convention, VERDICT r9 item 5): the committed
+under any other vocab — so a rebuild writes BOTH through
+``_lake.replace_dir`` (shared with build_pq_layer): the committed
 artifact keeps serving until the replacement is complete, a crash
-mid-build leaves it untouched, and a crash between the two renames is
-healed on the next run by restoring the parked ``.old`` snapshot.
-The old in-place write could crash after rewriting vocab.json but
-before the encoded parquet committed, leaving a NEW vocab beside OLD
-(or absent) ids.
+mid-build leaves it untouched, and a crash between the two swap
+renames is healed on the next run. An in-place write could crash
+after rewriting vocab.json but before the encoded parquet committed,
+leaving a NEW vocab beside OLD (or absent) ids.
 
 Scale shape: both modes collect only constant-size tables to the
 driver (top-V vocab / word-type table + the provably bounded symbol
@@ -42,10 +40,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from ._lake import replace_dir
 
 
 def tokenize_corpus(
@@ -62,14 +61,11 @@ def tokenize_corpus(
     """Returns counts only (the O5 XCom rule): n_docs, n_tokens, and
     per-mode vocabulary stats.
 
-    SINGLE-WRITER per ``output_dir``, like every maintenance job here
-    (and build_pq_layer, which shares the swap protocol): the staged
-    swap uses the fixed sibling names ``<out>.staging`` / ``<out>.old``
-    and sweeps them as crash residue, so two concurrent runs on the
-    same output_dir would delete each other's in-flight staging or
-    parked snapshot. Serialize via the orchestrator (the DAGs already
-    run one tokenize task per corpus); concurrency across DIFFERENT
-    output_dirs is fine."""
+    SINGLE-WRITER per ``output_dir``, like every lake rewrite
+    (``replace_dir`` uses fixed sibling names and sweeps them as crash
+    residue). Serialize via the orchestrator (the DAGs already run one
+    tokenize task per corpus); concurrency across DIFFERENT output_dirs
+    is fine."""
     from ..operators.text import (
         bpe_encode,
         bpe_symbol_vocab,
@@ -85,96 +81,73 @@ def tokenize_corpus(
         raise ValueError(f"unknown tokenize mode {mode!r} — use 'word' or 'bpe'")
 
     docs = spark.read.parquet(input_path)
-    out = output_dir.rstrip("/")
-    staging, old = out + ".staging", out + ".old"
-    marker = os.path.join(out, "encoded", "_SUCCESS")
-    old_marker = os.path.join(old, "encoded", "_SUCCESS")
-    # heal a crash between the two swap renames: out/ was renamed away
-    # but staging/ never renamed in — restore the committed snapshot
-    # parked in old/ before anything treats it as deletable residue
-    if not os.path.exists(marker) and os.path.exists(old_marker):
-        if os.path.isdir(out):
-            shutil.rmtree(out)
-        os.rename(old, out)
-    # stale residue from a crashed earlier build/swap
-    for residue in (staging, old):
-        if os.path.isdir(residue):
-            shutil.rmtree(residue)
-    os.makedirs(staging)
-    vocab_path = os.path.join(staging, "vocab.json")
-    encoded_dir = os.path.join(staging, "encoded")
 
-    if mode == "word":
-        vocab = pin(build_vocab(docs, text_col, vocab_size=vocab_size))
-        table = {r["token"]: r["token_id"] for r in vocab.collect()}
-        with open(vocab_path, "w") as f:
-            json.dump(
-                {"mode": "word", "vocab_size": vocab_size, "tokens": table},
-                f,
-                sort_keys=True,
-            )
-        enc = vocab_encode(docs, vocab, id_col, text_col)
-        enc.write.mode("overwrite").parquet(encoded_dir)
-        row = spark.read.parquet(encoded_dir).agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("n_oov").alias("n_oov"),
-        ).collect()[0]
-        stats = {
-            "mode": "word",
-            "n_docs": int(row["n_docs"]),
-            "n_tokens": int(row["n_tokens"] or 0),
-            "n_oov": int(row["n_oov"] or 0),
-            "n_vocab": len(table),
-        }
-    else:
-        merges = bpe_train(
-            docs, text_col, n_merges=n_merges, max_word_types=max_word_types
-        )
-        # one pinned tokenize pass + type table shared by vocab + encode
-        flat = bpe_token_stream(docs, id_col, text_col)
-        types = bpe_type_table(flat, merges)
-        vocab = pin(bpe_symbol_vocab(docs, merges, id_col, text_col, types=types))
-        syms = {r["sym"]: r["sym_id"] for r in vocab.collect()}
-        with open(vocab_path, "w") as f:
-            json.dump(
-                {
-                    "mode": "bpe",
-                    "n_merges": n_merges,
-                    "max_word_types": max_word_types,
-                    "merges": [[l, r, c] for l, r, c in merges],
-                    "symbols": syms,
-                },
-                f,
-                sort_keys=True,
-            )
-        enc = bpe_encode(
-            docs, merges, id_col, text_col, vocab=vocab, types=types, flat=flat
-        )
-        enc.write.mode("overwrite").parquet(encoded_dir)
-        row = spark.read.parquet(encoded_dir).agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("n_subwords").alias("n_subwords"),
-        ).collect()[0]
-        stats = {
-            "mode": "bpe",
-            "n_docs": int(row["n_docs"]),
-            "n_tokens": int(row["n_tokens"] or 0),
-            "n_subwords": int(row["n_subwords"] or 0),
-            "n_merges": len(merges),
-            "n_symbols": len(syms),
-        }
-
-    # atomic-enough swap: the committed artifact (if any) is parked in
-    # old/ only after staging is COMPLETE, and a crash between the two
-    # renames is healed by the restore above on the next run
-    if os.path.isdir(out):
-        if os.path.exists(marker):
-            os.rename(out, old)
+    def build(staging: str) -> dict:
+        vocab_path = os.path.join(staging, "vocab.json")
+        encoded_dir = os.path.join(staging, "encoded")
+        if mode == "word":
+            vocab = pin(build_vocab(docs, text_col, vocab_size=vocab_size))
+            table = {r["token"]: r["token_id"] for r in vocab.collect()}
+            with open(vocab_path, "w") as f:
+                json.dump(
+                    {"mode": "word", "vocab_size": vocab_size, "tokens": table},
+                    f,
+                    sort_keys=True,
+                )
+            enc = vocab_encode(docs, vocab, id_col, text_col)
+            enc.write.mode("overwrite").parquet(encoded_dir)
+            row = spark.read.parquet(encoded_dir).agg(
+                F.count("*").alias("n_docs"),
+                F.sum("n_tokens").alias("n_tokens"),
+                F.sum("n_oov").alias("n_oov"),
+            ).collect()[0]
+            stats = {
+                "mode": "word",
+                "n_docs": int(row["n_docs"]),
+                "n_tokens": int(row["n_tokens"] or 0),
+                "n_oov": int(row["n_oov"] or 0),
+                "n_vocab": len(table),
+            }
         else:
-            shutil.rmtree(out)
-    os.rename(staging, out)
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    return stats
+            merges = bpe_train(
+                docs, text_col, n_merges=n_merges, max_word_types=max_word_types
+            )
+            # one pinned tokenize pass + type table shared by vocab + encode
+            flat = bpe_token_stream(docs, id_col, text_col)
+            types = bpe_type_table(flat, merges)
+            vocab = pin(bpe_symbol_vocab(docs, merges, id_col, text_col, types=types))
+            syms = {r["sym"]: r["sym_id"] for r in vocab.collect()}
+            with open(vocab_path, "w") as f:
+                json.dump(
+                    {
+                        "mode": "bpe",
+                        "n_merges": n_merges,
+                        "max_word_types": max_word_types,
+                        "merges": [[l, r, c] for l, r, c in merges],
+                        "symbols": syms,
+                    },
+                    f,
+                    sort_keys=True,
+                )
+            enc = bpe_encode(
+                docs, merges, id_col, text_col, vocab=vocab, types=types, flat=flat
+            )
+            enc.write.mode("overwrite").parquet(encoded_dir)
+            row = spark.read.parquet(encoded_dir).agg(
+                F.count("*").alias("n_docs"),
+                F.sum("n_tokens").alias("n_tokens"),
+                F.sum("n_subwords").alias("n_subwords"),
+            ).collect()[0]
+            stats = {
+                "mode": "bpe",
+                "n_docs": int(row["n_docs"]),
+                "n_tokens": int(row["n_tokens"] or 0),
+                "n_subwords": int(row["n_subwords"] or 0),
+                "n_merges": len(merges),
+                "n_symbols": len(syms),
+            }
+        return stats
+
+    return replace_dir(
+        output_dir.rstrip("/"), build, os.path.join("encoded", "_SUCCESS")
+    )

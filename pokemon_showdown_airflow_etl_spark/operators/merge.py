@@ -7,9 +7,9 @@ replay_id (db.py:230-236) and updates stage flags in place
     upsert = read current || union updates || keep newest row per key
 
 At 100 TB the physical write must not rewrite the whole table: the lake
-is partitioned by format_id, and ``write_upsert`` rewrites only the
-partitions that received updates (dynamic partition overwrite) — the
-moral equivalent of Delta's MERGE file pruning. Updates are tiny relative
+is partitioned by (format_id, month), and jobs.lake.MetadataStore
+rewrites only the partitions that received updates (a staged partition
+swap) — the moral equivalent of Delta's MERGE file pruning. Updates are tiny relative
 to the table, so they broadcast into the anti-join/ window.
 """
 
@@ -67,5 +67,5 @@ def merge_patch(current: DataFrame, patch: DataFrame, keys: list[str]) -> DataFr
 
 
 # The physical partition-scoped write lives in jobs.lake.MetadataStore
-# (insert_new / patch / upsert_rows + _dynamic_overwrite), which composes
-# the logical merges above with dynamic partition overwrite.
+# (insert_new / patch / upsert_rows), which commits the logical merges
+# above through jobs._lake.replace_partitions (stage, then swap).

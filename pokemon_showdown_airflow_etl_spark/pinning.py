@@ -16,7 +16,8 @@ identity so the full tree is visible; production paths keep the pin.
 
 Only LAZY pins route through here. Eager ``localCheckpoint(eager=True)``
 sites are genuine materialization barriers (iterative lineage
-truncation, read-before-overwrite) and are not plan-shape sugar.
+truncation, a frame read again after a partition swap replaced its
+source) and are not plan-shape sugar.
 
 Cluster-reliability note (VERDICT r7 item 10): ``localCheckpoint``
 blocks live on executor LOCAL storage with lineage truncated — on a
@@ -79,9 +80,8 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     ``keys``: optional hash-partitioning columns (deterministic row ->
     partition mapping under task retries); without keys, round-robin
     (Spark's sort-before-repartition keeps retries deterministic).
-    ``SPARK_GRAFT_SPREAD=0`` disables spreading globally.
     """
-    if os.environ.get("SPARK_GRAFT_SPREAD") == "0" or not _ENABLED:
+    if not _ENABLED:
         return df
     if df.isStreaming:
         return df

@@ -503,15 +503,54 @@ def test_parallel_backfill_failed_range_never_creates_gaps(spark, lake):
     assert meta.select("replay_id").distinct().count() == n
 
 
-def test_patch_rewrites_only_touched_month_partitions(spark, lake):
-    """The metadata table is sub-partitioned by (format_id, uploadtime
-    month); a lifecycle patch must rewrite ONLY the month partitions
-    its keys live in — untouched months' files stay byte-identical —
-    and the swap must leave no staging/backup litter behind."""
+def _file_digests(root):
     import hashlib
     import os
 
-    # 90 hourly-ish replays spread across ~4 months (step 1 day)
+    out = {}
+    for dirpath, _dirs, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(dirpath, fn)
+            with open(p, "rb") as f:
+                out[os.path.relpath(p, root)] = hashlib.md5(f.read()).hexdigest()
+    return out
+
+
+def _assert_rewrote_only(table, before, touched_prefix):
+    """Every file outside ``touched_prefix`` is byte-identical, the
+    touched partition did change, and the swap left no litter."""
+    import os
+
+    after = _file_digests(table)
+    for rel, digest in before.items():
+        if rel.startswith(touched_prefix) or os.path.basename(rel) == "_SUCCESS":
+            continue
+        assert after.get(rel) == digest, f"untouched partition file changed: {rel}"
+    assert any(
+        rel.startswith(touched_prefix) and before.get(rel) != after.get(rel)
+        for rel in set(before) | set(after)
+    )
+    assert not os.path.exists(table + "__staging")
+    leftovers = [
+        os.path.join(dp, d)
+        for dp, dirs, _f in os.walk(table)
+        for d in dirs
+        if d.startswith(".swap-")
+    ]
+    assert leftovers == []
+
+
+def test_patch_rewrites_only_touched_month_partitions(spark, lake, tmp_path):
+    """Partition rewrites touch only the partitions they name —
+    untouched partitions' files stay byte-identical — and the swap
+    leaves no staging/backup litter behind. Two inputs: a lifecycle
+    patch of the metadata table, which is sub-partitioned by
+    (format_id, uploadtime month), must rewrite ONLY the month its keys
+    live in; and a compaction that lands one new day must rewrite ONLY
+    that (format, date) partition of the compacted lake."""
+    import os
+
+    # 90 replays spread across ~4 months (step 1 day)
     n = 90
     client = ReplayApiClient(
         transport=FakeShowdownTransport({FMT: make_replays(FMT, n, step=86_400)}),
@@ -520,21 +559,12 @@ def test_patch_rewrites_only_touched_month_partitions(spark, lake):
     discover(spark, lake, client, FMT, max_pages=10)
     meta = MetadataStore(spark, lake.metadata_path)
 
-    def snapshot(root):
-        out = {}
-        for dirpath, _dirs, files in os.walk(root):
-            for fn in files:
-                p = os.path.join(dirpath, fn)
-                with open(p, "rb") as f:
-                    out[os.path.relpath(p, root)] = hashlib.md5(f.read()).hexdigest()
-        return out
-
     month_dirs = sorted(
         d for d in os.listdir(os.path.join(lake.metadata_path, f"format_id={FMT}"))
         if d.startswith("um=")
     )
     assert len(month_dirs) >= 3, f"test premise: multi-month table, got {month_dirs}"
-    before = snapshot(lake.metadata_path)
+    before = _file_digests(lake.metadata_path)
 
     # patch exactly the replays of the NEWEST month
     newest = month_dirs[-1]
@@ -544,28 +574,34 @@ def test_patch_rewrites_only_touched_month_partitions(spark, lake):
     patch = keys.localCheckpoint(eager=True).withColumn("is_downloaded", F.lit(True))
     meta.patch(patch, FMT)
 
-    after = snapshot(lake.metadata_path)
-    touched_prefix = os.path.join(f"format_id={FMT}", newest)
-    for rel, digest in before.items():
-        if rel.startswith(touched_prefix) or os.path.basename(rel) == "_SUCCESS":
-            continue
-        assert after.get(rel) == digest, f"untouched partition file changed: {rel}"
-    # the patched month did change, and the patch took effect
-    assert any(
-        rel.startswith(touched_prefix) and before.get(rel) != after.get(rel)
-        for rel in set(before) | set(after)
+    _assert_rewrote_only(
+        lake.metadata_path, before, os.path.join(f"format_id={FMT}", newest)
     )
     got = meta.read().filter(F.col("is_downloaded")).count()
     assert got == n_keys
-    # no litter from the swap
-    assert not os.path.exists(lake.metadata_path + "__staging")
-    leftovers = [
-        os.path.join(dp, d)
-        for dp, dirs, _f in os.walk(lake.metadata_path)
-        for d in dirs
-        if d.startswith(".swap-")
-    ]
-    assert leftovers == []
+
+    # second input: compaction of one new day into an existing lake
+    days = 5
+    lake2 = ReplayLake(str(tmp_path / "lake2"))
+    for n_replays in (days, days + 1):  # the extra replay is one day later
+        client = ReplayApiClient(
+            transport=FakeShowdownTransport(
+                {FMT: make_replays(FMT, n_replays, step=86_400)}
+            ),
+            sleeper=lambda s: None,
+        )
+        if n_replays > days:
+            before = _file_digests(lake2.compacted_path)
+        discover(spark, lake2, client, FMT, max_pages=10)
+        download(spark, lake2, client, FMT, parallelism=4)
+        stats = compact(spark, lake2, FMT)
+    assert stats["compacted"] == 1 and stats["dates_processed"] == 1
+    date_dirs = sorted(os.listdir(os.path.join(lake2.compacted_path, f"format={FMT}")))
+    assert len(date_dirs) == days + 1
+    _assert_rewrote_only(
+        lake2.compacted_path, before, os.path.join(f"format={FMT}", date_dirs[-1])
+    )
+    assert spark.read.parquet(lake2.compacted_path).count() == days + 1
 
 
 def test_cleanup_lake_removes_litter_and_restores_lost_swaps(spark, lake):
@@ -611,11 +647,15 @@ def test_cleanup_lake_removes_litter_and_restores_lost_swaps(spark, lake):
     assert audit["duplicate_keys"] == 0
 
 
-def test_optimize_lake_coalesces_files_per_partition(spark, lake):
+def test_optimize_lake_coalesces_files_per_partition(spark, lake, monkeypatch):
     import glob
     import os
 
-    from pokemon_showdown_airflow_etl_spark.jobs import optimize_lake
+    from pokemon_showdown_airflow_etl_spark.jobs import (
+        audit_lake,
+        cleanup_lake,
+        optimize_lake,
+    )
 
     client = healthy_client(40)
     discover(spark, lake, client, FMT, max_pages=10)
@@ -630,3 +670,54 @@ def test_optimize_lake_coalesces_files_per_partition(spark, lake):
         files = [f for f in os.listdir(day_dir) if f.endswith(".parquet")]
         assert len(files) == 1, f"{day_dir} has {len(files)} files"
     assert spark.read.parquet(lake.replays_path).count() == n_docs
+
+    # a crash between the swap renames strands a day partition at its
+    # .swap- backup; cleanup_lake restores it and the lake audits clean
+    real_rename = os.rename
+    staging = lake.replays_path + "__staging"
+
+    def crash_on_swap_in(src, dst):
+        if src.startswith(staging + os.sep):
+            raise RuntimeError("injected crash between swap renames")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_swap_in)
+    with pytest.raises(RuntimeError, match="between swap renames"):
+        optimize_lake(spark, lake, target_files_per_partition=1)
+    monkeypatch.setattr(os, "rename", real_rename)
+    fmt_dir = os.path.join(lake.replays_path, f"format={FMT}")
+    assert any(d.startswith(".swap-") for d in os.listdir(fmt_dir))
+    stats = cleanup_lake(lake)
+    assert stats["restored"] == 1
+    assert not os.path.exists(staging)
+    assert not any(d.startswith(".swap-") for d in os.listdir(fmt_dir))
+    assert spark.read.parquet(lake.replays_path).count() == n_docs
+    assert audit_lake(spark, lake)["ok"]
+
+
+def test_commit_swaps_live_only_in_lake_module():
+    """Every lake rewrite commits through jobs/_lake.py. No other
+    package module may toggle partitionOverwriteMode or name a
+    staging/backup sibling (``__staging``, ``.staging``, ``.old``,
+    ``.swap-``): that would be a second commit path to keep crash-safe."""
+    import ast
+    import pathlib
+
+    import pokemon_showdown_airflow_etl_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel == "jobs/_lake.py":
+            continue
+        src = path.read_text()
+        if "partitionOverwriteMode" in src:
+            offenders.append(f"{rel}: partitionOverwriteMode")
+        for node in ast.walk(ast.parse(src)):
+            if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+                continue
+            v = node.value
+            if v.endswith(("__staging", ".staging", ".old")) or v.startswith(".swap-"):
+                offenders.append(f"{rel}:{node.lineno}: {v!r}")
+    assert offenders == []
